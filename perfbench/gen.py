@@ -1,14 +1,14 @@
-"""Seeded input generator for the three benchmark workloads.
+"""Seeded input generator for the benchmark workloads.
 
 Everything here is a pure function of ``(seed, parameters)``: numpy's
 PCG64 generator drives every draw, so one seed always yields the same
 parquet bytes' worth of rows. The engine only ever sees the parquet
-directory written here, in the schemas of ``FIXTURES.md`` (the TPC-H-ish
-star schema, ``documents`` and ``embeddings``).
+directory written here, in the schemas of ``FIXTURES.md`` (``documents``
+and ``embeddings``).
 
-Value domains copy the repository's synthetic test tables (uniform keys,
-the same categorical vocabularies and ranges), so every registered query
-and its DuckDB oracle run on these files unchanged.
+Value domains copy the repository's synthetic test tables (the same
+vocabularies and ranges), so every registered query and its DuckDB
+oracle run on these files unchanged.
 """
 
 from __future__ import annotations
@@ -28,114 +28,12 @@ VOCAB = (
 ).split()
 
 LANGS = ("en", "en", "en", "zh", "es", "fr", "de")
-SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
-PART_ADJ = ("red", "blue", "hot", "cold", "new", "old", "small", "large")
-PART_NOUN = ("bolt", "anvil", "ring", "rod", "plate", "gear", "nut", "spring")
-PART_TYPES = ("ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD")
-PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
 EMB_DIM = 64
 EMB_LABELS = 10
-
-_DAY_US = 86_400_000_000
-_EPOCH_1995_US = 788_918_400_000_000  # 1995-01-01T00:00:00 UTC
 
 
 def _write(table: pa.Table, path: str) -> None:
     pq.write_table(table, path)
-
-
-def _dates(rng: np.random.Generator, n: int, days: int, offset_days: int = 0) -> pa.Array:
-    us = _EPOCH_1995_US + (rng.integers(0, days, n) + offset_days) * _DAY_US
-    return pa.array(us.astype("int64"), type=pa.timestamp("us"))
-
-
-def _cents(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def warehouse_tables(out_dir: str, seed: int, lineitem_rows: int) -> dict[str, int]:
-    """Write the star schema (region … lineitem) with ``lineitem_rows``
-    line items, four per order on average. Returns rows per table."""
-    rng = np.random.default_rng([seed, 1])
-    n_orders = lineitem_rows // 4
-    n_cust = max(150, n_orders // 10)
-    n_part = max(200, lineitem_rows // 30)
-    n_supp = max(10, lineitem_rows // 600)
-    os.makedirs(out_dir, exist_ok=True)
-    tables = {
-        "region": pa.table(
-            {
-                "r_regionkey": pa.array(range(5), pa.int32()),
-                "r_name": list(REGIONS),
-            }
-        ),
-        "nation": pa.table(
-            {
-                "n_nationkey": pa.array(range(25), pa.int32()),
-                "n_name": [f"NATION_{i}" for i in range(25)],
-                "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-            }
-        ),
-        "customer": pa.table(
-            {
-                "c_custkey": np.arange(n_cust, dtype="int64"),
-                "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-                "c_nationkey": rng.integers(0, 25, n_cust).astype("int32"),
-                "c_acctbal": _cents(rng, -999.99, 9999.99, n_cust),
-                "c_mktsegment": np.array(SEGMENTS)[rng.integers(0, 5, n_cust)],
-            }
-        ),
-        "supplier": pa.table(
-            {
-                "s_suppkey": np.arange(n_supp, dtype="int64"),
-                "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-                "s_nationkey": rng.integers(0, 25, n_supp).astype("int32"),
-                "s_acctbal": _cents(rng, -999.99, 9999.99, n_supp),
-            }
-        ),
-        "part": pa.table(
-            {
-                "p_partkey": np.arange(n_part, dtype="int64"),
-                "p_name": [
-                    f"{PART_ADJ[a]} {PART_NOUN[b]}"
-                    for a, b in zip(rng.integers(0, 8, n_part), rng.integers(0, 8, n_part))
-                ],
-                "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-                "p_type": np.array(PART_TYPES)[rng.integers(0, 6, n_part)],
-                "p_size": rng.integers(1, 51, n_part).astype("int32"),
-                "p_retailprice": np.round(900.0 + (np.arange(n_part) % 1000) * 0.1, 1),
-            }
-        ),
-        "orders": pa.table(
-            {
-                "o_orderkey": np.arange(n_orders, dtype="int64"),
-                "o_custkey": rng.integers(0, n_cust, n_orders).astype("int64"),
-                "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, n_orders)],
-                "o_totalprice": _cents(rng, 1000.0, 500000.0, n_orders),
-                "o_orderdate": _dates(rng, n_orders, 2405),
-                "o_orderpriority": np.array(PRIORITIES)[rng.integers(0, 5, n_orders)],
-            }
-        ),
-        "lineitem": pa.table(
-            {
-                "l_orderkey": rng.integers(0, n_orders, lineitem_rows).astype("int64"),
-                "l_partkey": rng.integers(0, n_part, lineitem_rows).astype("int64"),
-                "l_suppkey": rng.integers(0, n_supp, lineitem_rows).astype("int64"),
-                "l_linenumber": rng.integers(1, 8, lineitem_rows).astype("int32"),
-                "l_quantity": rng.integers(1, 51, lineitem_rows).astype("float64"),
-                "l_extendedprice": _cents(rng, 900.0, 105000.0, lineitem_rows),
-                "l_discount": rng.integers(0, 11, lineitem_rows) / 100.0,
-                "l_tax": rng.integers(0, 9, lineitem_rows) / 100.0,
-                "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, lineitem_rows)],
-                "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, lineitem_rows)],
-                "l_shipdate": _dates(rng, lineitem_rows, 2499, offset_days=1),
-            }
-        ),
-    }
-    for name, table in tables.items():
-        _write(table, os.path.join(out_dir, f"{name}.parquet"))
-    return {name: table.num_rows for name, table in tables.items()}
 
 
 def trigrams(text: str) -> set[tuple[str, ...]]:

@@ -1,8 +1,8 @@
 """Per-layer metrics of a traced run, and the benchmark's self-test.
 
 Span-derived values are averaged per *traced* unit of work (a pass of
-the query list, or one micro-batch); set-up values are the median over
-the run's set-ups; ``spark.*`` values come from the event log and
+the query list, or one micro-batch); set-up values come from the run's
+one set-up; ``spark.*`` values come from the event log and
 ``jvm.*`` values from the driver JVM's management beans, both averaged
 over every unit. A layer's ``.s`` is inclusive time of the
 calls that enter it from outside; ``.calls`` counts those entries.
@@ -80,21 +80,18 @@ def per_layer(
     wcfg: dict,
     tracer: Tracer,
     res: Result,
-    setup_windows: list[tuple[float, float]],
+    setup: tuple[float, float],
     events_dir: str,
     app_id: str,
     cores: int,
 ) -> tuple[dict[str, float], list[str], bool]:
     """Returns (metric values, summary lines, self-test verdict)."""
     v: dict[str, float] = dict.fromkeys(PER_LAYER, 0.0)
-    setups = [tracer.within(a, b) for a, b in setup_windows]
-    v["session.start_s"] = statistics.median(
-        sum(s.dur for s in _named(tracer, idx, "session.get_spark")) for idx in setups
-    )
-    v["sources.tbl.calls"] = statistics.median(len(_named(tracer, idx, "sources.tbl")) for idx in setups)
-    v["sources.tbl.s"] = statistics.median(
-        sum(s.dur for s in _named(tracer, idx, "sources.tbl")) for idx in setups
-    )
+    in_setup = tracer.within(*setup)
+    v["session.start_s"] = sum(s.dur for s in _named(tracer, in_setup, "session.get_spark"))
+    tbl = _named(tracer, in_setup, "sources.tbl")
+    v["sources.tbl.calls"] = len(tbl)
+    v["sources.tbl.s"] = sum(s.dur for s in tbl)
 
     traced = [(a, b) for a, b, t in res.units if t]
     untraced = [(a, b) for a, b, t in res.units if not t]
@@ -117,7 +114,8 @@ def per_layer(
     v.update(eventlog.counters(events, [(a, b) for a, b, _ in res.units], cores))
 
     med = statistics.median
-    v["trace.overhead_ratio"] = med(b - a for a, b in traced) / med(b - a for a, b in untraced)
+    mean = statistics.fmean
+    v["trace.overhead_ratio"] = mean(b - a for a, b in traced) / mean(b - a for a, b in untraced)
     if workload == "ingest_stream":
         wall = res.span[1] - res.span[0]
         committed = [op for op in res.ops if op.build_end > 0]

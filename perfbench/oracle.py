@@ -1,49 +1,30 @@
 """Result checks against each query's registered DuckDB oracle.
 
-The normalisation mirrors ``tests/_compare.py`` (the repository's copy of
-the correctness gate): exact column-name set, equal row counts, and
-order-insensitive values with DECIMAL → float, floats rounded to 9
-places, naive ISO timestamps, sorted columns and rows.
+The comparison is the repository's own correctness gate,
+``tests/_compare.py``, loaded from the checkout: exact column-name set,
+equal row counts, the same numeric kind per column (int vs float, no
+DECIMAL on the engine side), and order-insensitive values after its
+normalisation.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-import math
+import importlib.util
 import os
-from decimal import Decimal
 
 import duckdb
 
-
-def _norm_val(v):
-    if v is None or isinstance(v, bool):
-        return v
-    if isinstance(v, Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        r = round(v, 9)
-        return 0.0 if r == 0 else r
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm_val(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((str(k), _norm_val(x)) for k, x in v.items()))
-    return v
+_COMPARE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "_compare.py")
 
 
-def normalize(cols: list[str], rows: list[tuple]) -> tuple[tuple[str, ...], list[tuple]]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_val(r[i]) for i in order) for r in rows]
-    out.sort(key=repr)
-    return tuple(sorted(cols)), out
+def _load_compare():
+    spec = importlib.util.spec_from_file_location("perfbench_compare", _COMPARE)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+_compare = _load_compare()
 
 
 class Oracle:
@@ -55,13 +36,13 @@ class Oracle:
         for t in tables:
             path = os.path.join(data_dir, f"{t}.parquet")
             self.con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-        self._expected: dict[str, tuple] = {}
+        self._expected: dict[str, tuple[list[str], list[tuple]]] = {}
 
-    def expected(self, name: str, sql: str) -> tuple:
+    def expected(self, name: str, sql: str) -> tuple[list[str], list[tuple]]:
         if name not in self._expected:
             cur = self.con.execute(sql)
             cols = [d[0] for d in cur.description]
-            self._expected[name] = normalize(cols, [tuple(r) for r in cur.fetchall()])
+            self._expected[name] = (cols, _compare._normalize(cols, [tuple(r) for r in cur.fetchall()]))
         return self._expected[name]
 
     def mismatch(self, name: str, sql: str | None, cols: list[str], rows: list[tuple]) -> str | None:
@@ -70,13 +51,17 @@ class Oracle:
         if sql is None:
             return None if rows else "no rows (rows-only check)"
         exp_cols, exp_rows = self.expected(name, sql)
-        got_cols, got_rows = normalize(cols, rows)
-        if got_cols != exp_cols:
-            return f"columns {list(got_cols)} != oracle {list(exp_cols)}"
-        if len(got_rows) != len(exp_rows):
-            return f"{len(got_rows)} rows != oracle {len(exp_rows)}"
-        bad = sum(a != b for a, b in zip(got_rows, exp_rows))
-        return f"{bad} of {len(got_rows)} rows differ from oracle" if bad else None
+        if sorted(cols) != sorted(exp_cols):
+            return f"columns {sorted(cols)} != oracle {sorted(exp_cols)}"
+        if len(rows) != len(exp_rows):
+            return f"{len(rows)} rows != oracle {len(exp_rows)}"
+        try:
+            _compare._assert_dtype_kinds_match(name, cols, rows, self.con, sql)
+        except AssertionError as e:
+            return str(e).splitlines()[0]
+        got = _compare._normalize(cols, rows)
+        bad = sum(a != b for a, b in zip(got, exp_rows))
+        return f"{bad} of {len(got)} rows differ from oracle" if bad else None
 
     def close(self) -> None:
         self.con.close()

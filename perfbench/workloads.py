@@ -1,9 +1,9 @@
-"""The three workloads: what runs, how it is timed and how it is checked.
+"""The two workloads: what runs, how it is timed and how it is checked.
 
 Each workload turns a seed into input files (:mod:`gen`), warms a fresh
 session up during set-up, runs its timed units of work and afterwards
-checks every output. A *unit* is one pass over the query list for the
-batch workloads and one micro-batch for ``ingest_stream``; an *op* is
+checks every output. A *unit* is one pass over the query list for
+``corpus_curation`` and one micro-batch for ``ingest_stream``; an *op* is
 one query or one arriving file. Times are epoch seconds.
 """
 
@@ -24,13 +24,6 @@ import pyarrow.parquet as pq
 import gen
 from oracle import Oracle
 from spans import Tracer
-
-
-#: input tables of each batch workload
-TABLES = {
-    "warehouse_sql": ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"],
-    "corpus_curation": ["documents", "embeddings"],
-}
 
 
 @dataclass
@@ -54,19 +47,17 @@ class Result:
 
 
 class BatchQueries:
-    """A fixed list of registered queries, run as whole passes until the
-    measuring time is used up (at least three); every result is kept for
-    the oracle."""
+    """A fixed list of registered queries, run as whole passes; every
+    result is kept for the oracle."""
 
-    def __init__(self, name: str, cfg: dict) -> None:
-        self.name = name
+    name = "corpus_curation"
+    tables = ["documents", "embeddings"]
+
+    def __init__(self, cfg: dict) -> None:
         self.cfg = cfg
-        self.tables = TABLES[name]
         self.rows: list[tuple[list[str], list[tuple]] | None] = []
 
     def generate(self, data_dir: str, seed: int) -> dict:
-        if self.name == "warehouse_sql":
-            return gen.warehouse_tables(data_dir, seed, self.cfg["lineitem_rows"])
         return gen.corpus_tables(
             data_dir,
             seed,
@@ -85,8 +76,9 @@ class BatchQueries:
             tables.tbl(spark, data_dir, t).count()
 
     def warm_pass(self, spark, data_dir: str, work_dir: str) -> None:
-        """One untimed pass: JIT and codegen caches are cold after set-up,
-        and the first pass runs ~40% slower than later ones."""
+        """One untimed pass: JIT and codegen caches are cold in a new
+        JVM, and the first pass runs about three times as long as later
+        ones."""
         from mapreduceframework_cpp_spark import registry
 
         for name in self.cfg["queries"]:
@@ -98,13 +90,14 @@ class BatchQueries:
 
         queries = registry.QUERIES
         res = Result()
-        t_begin = time.time()
-        # At least three passes, so one pass slowed by the host cannot
-        # move the median.
-        min_units = 3
-        unit = 0
-        while True:
-            traced = tracer is not None and unit % 2 == 1
+        # The pass count follows from --seconds and the planned pass time,
+        # never from how fast this run goes: passes keep getting faster
+        # while the JIT compiles, so a count that grew on a fast host would
+        # move the median. At least three, so one pass slowed by the host
+        # cannot move it either.
+        passes = max(3, round(seconds / self.cfg["pass_s"]))
+        for unit in range(passes):
+            traced = tracer is not None and _traced_unit(unit, passes)
             if tracer:
                 tracer.enabled = traced
             u0 = time.time()
@@ -125,9 +118,6 @@ class BatchQueries:
                 op.end = time.time()
                 res.ops.append(op)
             res.units.append((u0, time.time(), traced))
-            unit += 1
-            if unit >= min_units and time.time() - t_begin >= seconds:
-                break
         if tracer:
             tracer.enabled = False
         res.span = (res.units[0][0], res.units[-1][1])
@@ -195,14 +185,15 @@ class IngestStream:
         spark.read.parquet(os.path.join(data_dir, "initial_corpus.parquet")).count()
 
     def warm_pass(self, spark, data_dir: str, work_dir: str) -> None:
-        """Two untimed batches, as the batch workloads' warm-up pass:
-        the dedup path's first run after set-up is several times slower."""
+        """Three untimed batches, as the batch workload's warm-up pass:
+        the dedup path's first run in a new JVM is several times slower,
+        and the next two still slow enough to queue the first files."""
         from mapreduceframework_cpp_spark.streaming import ingest_dedup
 
         warm_corpus = os.path.join(work_dir, "warm_corpus")
         self._seed_corpus(data_dir, warm_corpus)
         warm_batch = spark.read.parquet(os.path.join(data_dir, "warmup_batch.parquet"))
-        for batch_id in range(2):
+        for batch_id in range(3):
             ingest_dedup.process_dedup_batch(warm_batch, batch_id, warm_corpus)
 
     def measure(self, spark, data_dir: str, work_dir: str, seconds: float, tracer: Tracer | None) -> Result:
@@ -221,7 +212,7 @@ class IngestStream:
         done = threading.Event()
 
         def on_batch(batch_df, batch_id: int) -> None:
-            traced = tracer is not None and batch_id % 2 == 1
+            traced = tracer is not None and _traced_unit(batch_id, n)
             if tracer:
                 tracer.enabled = traced
             t0 = time.time()
@@ -325,6 +316,14 @@ class IngestStream:
             if f.endswith(".parquet")
         )
         res.extra["input_bytes"] = self.input_bytes
+
+
+def _traced_unit(k: int, n: int) -> bool:
+    """Whether unit ``k`` of ``n`` is traced. The pattern is symmetric
+    about the middle of the run (U T U, U T T U, U T U T U, ...), so
+    traced and untraced units sit at the same mean position and a steady
+    speed-up through the run (the JIT) cancels out of their ratio."""
+    return min(k, n - 1 - k) % 2 == 1
 
 
 def _release() -> None:
