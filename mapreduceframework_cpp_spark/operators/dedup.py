@@ -450,27 +450,28 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """60-bit SimHash per document over word tokens (frequency-weighted:
     repeated tokens vote repeatedly). Pure JVM: token explode + 60
     conditional sums + bit reassembly; bit source = portable_hash60
-    (see SIMHASH_BITS)."""
+    (see SIMHASH_BITS).
+
+    The 60 vote sums and the OR chain that reassembles them are one SQL
+    expression parsed JVM-side in one ``F.expr`` call. Built through the
+    Column API, where every node is a py4j round trip, the same tree took
+    9094 gateway commands and 2.7 s to build; now 88 and 0.24 s (sf0.01
+    documents, 4-vCPU VM). The single aggregate is the tree
+    CollapseProject made of the former sums-then-projection pair, so the
+    optimized plan is unchanged (plans/r15)."""
     from mapreduceframework_cpp_spark.operators.common import portable_hash60
 
     toks = spread(docs).select(
         "doc_id", F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
     ).withColumn("h", portable_hash60("tok"))
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(SIMHASH_BITS)
-        ]
+    bits = (
+        f"CASE WHEN sum(CASE WHEN (shiftright(`h`, {i}) & 1) = 1"
+        f" THEN 1 ELSE -1 END) > 0"
+        f" THEN shiftleft(CAST(1 AS BIGINT), {i}) ELSE CAST(0 AS BIGINT) END"
+        for i in range(SIMHASH_BITS)
     )
-    fingerprint = None
-    for i in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        fingerprint = bit if fingerprint is None else fingerprint.bitwiseOR(bit)
-    return votes.select("doc_id", fingerprint.alias("simhash"))
+    fingerprint = " | ".join(f"({b})" for b in bits)
+    return toks.groupBy("doc_id").agg(F.expr(f"{fingerprint} AS simhash"))
 
 
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 6) -> DataFrame:

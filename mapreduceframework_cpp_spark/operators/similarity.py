@@ -2,8 +2,10 @@
 
 Brute-force cosine top-k (the correctness baseline) and a random-
 hyperplane (sign-LSH) bucketed variant (the scale path). Dot products run
-through higher-order array functions (zip_with + aggregate) — JVM-side,
-no Python in the hot path.
+JVM-side, no Python in the hot path: through higher-order array functions
+(zip_with + aggregate) for arrays of unknown width, and as unrolled
+arithmetic, built as SQL text and parsed once, when the caller declares a
+fixed ``dim`` (see :func:`_dot_terms`).
 
 Scale design: brute force is O(|Q|·|C|·d) — fine when the query set is
 small and broadcastable, impossible corpus×corpus. The LSH variant
@@ -14,6 +16,8 @@ is why the recall test uses clustered synthetic data.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -32,9 +36,31 @@ def _dot(a, b):
     )
 
 
-def _dot_terms(fa, fb, dim: int):
+def _ident(name: str) -> str:
+    """Backtick-quoted SQL identifier for a column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _double_sql(x: float) -> str:
+    """SQL DOUBLE literal that parses back to the identical IEEE double:
+    the shortest ``repr`` round-trips, ``D`` keeps it DOUBLE (not
+    DECIMAL). Non-finite values have no literal syntax and go through a
+    string cast, which constant-folds to the same literal."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _elem_double(raw: str, i: int) -> str:
+    """``CAST(raw[i] AS DOUBLE)`` — the element cast inline on the RAW
+    column (usage rule on :func:`_dot_terms`)."""
+    return f"CAST({_ident(raw)}[{i}] AS DOUBLE)"
+
+
+def _dot_terms(terms) -> str:
     """Unrolled dot-product skeleton for a statically known element
-    count: ``lit(0.0) + fa(0)*fb(0) + ... + fa(dim-1)*fb(dim-1)``.
+    count, as SQL text: ``0.0D + t(0) + ... + t(dim-1)`` over the term
+    strings (each ``a[i] * b[i]`` or ``(x - c) * (x - c)``); callers
+    hand it to the JVM in ONE ``F.expr`` parse.
 
     Why it exists: ``aggregate``/``zip_with`` are CodegenFallback
     expressions — every evaluation is an interpreted per-element fold
@@ -44,6 +70,21 @@ def _dot_terms(fa, fb, dim: int):
     plain GetArrayItem/Multiply/Add nodes that whole-stage codegen
     compiles to straight-line JVM arithmetic (guide §1.2 "per-task
     work").
+
+    Why SQL text: every Column-API node (``F.col``, ``[i]``, ``cast``,
+    ``*``, ``+``, ``F.lit``) is a py4j gateway round trip (~0.3 ms
+    each), ~8 per term. Built node by node, ``with_norm(dim=64)`` sent
+    4314 gateway commands and took 0.7-1.4 s to build,
+    ``cosine_topk(dim=64)`` 11854 commands and 1.7-4.7 s (its plan runs
+    in 0.16 s), ``sign_lsh_buckets(emb, 64, 12)`` 46610 commands and
+    5.9-16.8 s. As one parse of SQL text the same builds send 74, 532
+    and 4 commands and take 0.07, 0.5 and 0.22 s (sf0.01 embeddings,
+    500x64, 4-vCPU VM). The parser builds the identical unresolved tree
+    JVM-side, so the optimized plan is unchanged (plans/r15), and a
+    builder's round-trip count no longer depends on ``dim``
+    (tests/test_llm_pipeline.py pins that count and the bit-identity
+    below). Column names are
+    backtick-quoted; literals are :func:`_double_sql`.
 
     Bit-identity: the Add chain associates left-to-right from the same
     0.0 seed, which IS the fold order of ``aggregate`` — identical
@@ -55,7 +96,7 @@ def _dot_terms(fa, fb, dim: int):
     array<float>[64] at every SF — FIXTURES.md; verified no
     null/short/long rows).
 
-    CRITICAL usage rule (measured, r14): the per-term columns must
+    CRITICAL usage rule (measured, r14): the per-term elements must
     index ATTRIBUTES (materialized columns) or the raw scan column with
     an inline element cast — NEVER an array built by a HOF (e.g. the
     ``transform``-cast ``_v``) in the same projection chain.
@@ -63,32 +104,75 @@ def _dot_terms(fa, fb, dim: int):
     ``2*dim`` term references, and because HOFs are CodegenFallback
     they are re-evaluated per reference — an A/B showed 3-8x
     REGRESSION before this rule, 2-7x improvement after."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + (fa(i) * fb(i))
-    return acc
+    return " + ".join(["0.0D", *terms])
 
 
-def _dot_fixed(a, b, dim: int):
+def _dot_fixed(a: str, b: str, dim: int) -> str:
     """Unrolled :func:`_dot` over two already-double array columns
-    (attributes across a join/exchange boundary — see the usage rule
-    on :func:`_dot_terms`)."""
-    return _dot_terms(lambda i: a[i], lambda i: b[i], dim)
+    ``a``, ``b`` (attributes across a join/exchange boundary — see the
+    usage rule on :func:`_dot_terms`)."""
+    a, b = _ident(a), _ident(b)
+    return _dot_terms(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
 
 
-def _dot_at(a, b, dim: int | None):
-    """``_dot_fixed`` when the caller declares a fixed width, else the
+def _dot_at(a: str, b: str, dim: int | None):
+    """Dot of the array columns named ``a`` and ``b``: the unrolled
+    :func:`_dot_fixed` when the caller declares a fixed width, else the
     generic HOF fold."""
-    return _dot(a, b) if dim is None else _dot_fixed(a, b, dim)
+    if dim is None:
+        return _dot(F.col(a), F.col(b))
+    return F.expr(_dot_fixed(a, b, dim))
 
 
-def _sq_norm_raw(raw, dim: int):
+def _sq_norm_raw(raw: str, dim: int) -> str:
     """Unrolled ``dot(_v, _v)`` computed from the RAW (float) array
     column with inline element casts: ``cast(raw[i]) * cast(raw[i])``
     is bit-identical to ``transform(raw, cast)[i] * ...`` but keeps
     the HOF out of the expression tree (usage rule above)."""
     return _dot_terms(
-        lambda i: raw[i].cast("double"), lambda i: raw[i].cast("double"), dim
+        f"{_elem_double(raw, i)} * {_elem_double(raw, i)}" for i in range(dim)
+    )
+
+
+def _norm_fixed(raw: str, dim: int):
+    """``sqrt`` of :func:`_sq_norm_raw` — the fixed-width L2 norm."""
+    return F.expr(f"sqrt({_sq_norm_raw(raw, dim)})")
+
+
+def _plane_dot(raw: str, plane) -> str:
+    """Unrolled ``dot(cast(raw), plane)`` against a literal plane, as
+    SQL text — the sign-LSH bit's dot product. Scalar literals against
+    the RAW column: identical values to the zip_with fold over the
+    transform-cast vector and an array literal
+    (``transform(x, cast)[i] == cast(x[i])``)."""
+    return _dot_terms(
+        f"{_elem_double(raw, i)} * {_double_sql(p)}" for i, p in enumerate(plane)
+    )
+
+
+def _sq_dist(raw: str, center) -> str:
+    """Unrolled squared distance from ``cast(raw)`` to a literal center,
+    as SQL text: ``acc + (x-y)*(x-y)`` left to right, the fold order of
+    :func:`_sq_dist_fold`."""
+    return _dot_terms(
+        f"({_elem_double(raw, i)} - {_double_sql(c)})"
+        f" * ({_elem_double(raw, i)} - {_double_sql(c)})"
+        for i, c in enumerate(center)
+    )
+
+
+def _array_sql(xs) -> str:
+    """``array(x0D, x1D, ...)`` literal of doubles, as SQL text."""
+    return "array(" + ", ".join(_double_sql(x) for x in xs) + ")"
+
+
+def _sq_dist_fold(v, center):
+    """Generic HOF squared distance from the double array column ``v``
+    to the array column ``center``."""
+    return F.aggregate(
+        F.zip_with(v, center, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
 
 
@@ -104,12 +188,12 @@ def with_norm(
     here, so the exclusion is uniform on both query and candidate
     sides; the SQL oracles carry the same ``> 0`` norm guard."""
     v = _as_double(F.col(vec_col))
-    norm = F.sqrt(
-        _dot(F.col("_v"), F.col("_v"))
+    norm = (
+        F.sqrt(_dot(F.col("_v"), F.col("_v")))
         if dim is None
         # norm from the RAW column, not _v: indexing the transform-built
         # _v would inline the HOF into all 2*dim terms (see _dot_terms)
-        else _sq_norm_raw(F.col(vec_col), dim)
+        else _norm_fixed(vec_col, dim)
     )
     return (
         emb.withColumn("_v", v)
@@ -143,7 +227,7 @@ def cosine_topk(
         .join(c, F.col("query_id") != F.col("cand_id"))
         .withColumn(
             "_cos",
-            _dot_at(F.col("_qv"), F.col("_cv"), dim)
+            _dot_at("_qv", "_cv", dim)
             / (F.col("_qn") * F.col("_cn")),
         )
     )
@@ -165,26 +249,14 @@ def sign_lsh_buckets(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Attach a sign-LSH bucket id: bit j = sign(v · plane_j). Planes are
-    deterministic (seeded) literal arrays — evaluated JVM-side."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = None
-    for j, plane in enumerate(planes):
-        # plane entries as scalar literals against the RAW column with
-        # inline element casts (see _dot_terms' usage rule): identical
-        # values to the former zip_with fold over the transform-cast _v
-        # (transform(x, cast)[i] == cast(x[i]); array-literal indexing
-        # constant-folds to the same scalars)
-        bit = F.when(
-            _dot_terms(
-                lambda i: F.col(vec_col)[i].cast("double"),
-                lambda i, _p=plane: F.lit(_p[i]),
-                dim,
-            )
-            > 0,
-            F.shiftleft(F.lit(1), j),
-        ).otherwise(0)
-        bucket = bit if bucket is None else bucket.bitwiseOR(bit)
-    return emb.withColumn("bucket", bucket)
+    deterministic (seeded) literals — the unrolled :func:`_plane_dot`
+    per bit, OR-ed left to right, parsed JVM-side in one ``F.expr``."""
+    bits = (
+        f"CASE WHEN {_plane_dot(vec_col, plane)} > 0"
+        f" THEN shiftleft(1, {j}) ELSE 0 END"
+        for j, plane in enumerate(_hyperplanes(dim, n_planes, seed))
+    )
+    return emb.withColumn("bucket", F.expr(" | ".join(f"({b})" for b in bits)))
 
 
 def lsh_topk(
@@ -220,7 +292,7 @@ def lsh_topk(
         .filter(F.col("query_id") != F.col("cand_id"))
         .withColumn(
             "_cos",
-            _dot_fixed(F.col("_qv"), F.col("_cv"), dim)
+            _dot_at("_qv", "_cv", dim)
             / (F.col("_qn") * F.col("_cn")),
         )
         .select("query_id", "cand_id", "_cos")
@@ -286,33 +358,28 @@ def ivf_topk(
     withq = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias(vec_col)
     ).withColumn("_v", _as_double(F.col(vec_col)))
-    def _d2(c):
-        # squared distance to a literal center: unrolled over the RAW
-        # column with inline casts when dim is fixed (same fold order:
-        # acc + (x-y)*(x-y), left to right — see _dot_terms), else the
-        # generic HOF fold over the transform-cast _v
-        if dim is None:
-            return F.aggregate(
-                F.zip_with(
-                    F.col("_v"),
-                    F.array(*[F.lit(x) for x in c]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+    # squared distance to each literal center: unrolled over the RAW
+    # column with inline casts when dim is fixed (_sq_dist, one parse
+    # for all cells), else the generic HOF fold over the transform-cast _v
+    if dim is None:
+        cell_d2 = F.array(
+            *[
+                F.struct(
+                    _sq_dist_fold(F.col("_v"), F.expr(_array_sql(c))).alias("d2"),
+                    F.lit(i).alias("cell"),
+                )
+                for i, c in enumerate(centers)
+            ]
+        )
+    else:
+        cell_d2 = F.expr(
+            "array("
+            + ", ".join(
+                f"struct({_sq_dist(vec_col, c)} AS d2, {i} AS cell)"
+                for i, c in enumerate(centers)
             )
-        acc = F.lit(0.0)
-        for i in range(dim):
-            t = F.col(vec_col)[i].cast("double") - F.lit(c[i])
-            acc = acc + t * t
-        return acc
-
-    cell_d2 = F.array(
-        *[
-            F.struct(_d2(c).alias("d2"), F.lit(i).alias("cell"))
-            for i, c in enumerate(centers)
-        ]
-    )
+            + ")"
+        )
     probed = (
         withq.withColumn(
             "cell",
@@ -324,10 +391,10 @@ def ivf_topk(
             "query_id",
             "cell",
             F.col("_v").alias("_qv"),
-            F.sqrt(
-                _dot(F.col("_v"), F.col("_v"))
+            (
+                F.sqrt(_dot(F.col("_v"), F.col("_v")))
                 if dim is None
-                else _sq_norm_raw(F.col(vec_col), dim)
+                else _norm_fixed(vec_col, dim)
             ).alias("_qn"),
         )
         # zero-norm queries are excluded like everywhere else (cosine
@@ -345,7 +412,7 @@ def ivf_topk(
         .filter(F.col("query_id") != F.col("cand_id"))
         .withColumn(
             "_cos",
-            _dot_at(F.col("_qv"), F.col("_cv"), dim)
+            _dot_at("_qv", "_cv", dim)
             / (F.col("_qn") * F.col("_cn")),
         )
     )
@@ -386,7 +453,7 @@ def embedding_near_dups(
     # dot runs for half the pair space; the survivors' projection
     # recomputes it (a per-survivor cost, negligible next to the pair
     # scan). Same rows, same values.
-    cos = _dot_at(F.col("_va"), F.col("_vb"), dim) / (F.col("_na") * F.col("_nb"))
+    cos = _dot_at("_va", "_vb", dim) / (F.col("_na") * F.col("_nb"))
     return (
         a.join(b, (F.col("vec_id_a") < F.col("vec_id_b")) & (cos >= threshold))
         .select("vec_id_a", "vec_id_b", F.round(cos, 6).alias("cos_sim"))
@@ -444,7 +511,7 @@ def label_blocked_knn(
         & (F.col("vec_id") != F.col("neighbor_id")),
     ).withColumn(
         "_cos",
-        _dot_at(F.col("_qv"), F.col("_cv"), dim)
+        _dot_at("_qv", "_cv", dim)
         / (F.col("_qn") * F.col("_cn")),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
@@ -486,20 +553,11 @@ def kmeans_cluster_report(
     centers = model.clusterCenters()
     assigned = model.transform(feats).select("vec_id", "_v", "cluster")
     # squared distance to own centroid, JVM-side against literal centers
-    center_arr = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in c])
-            for c in centers
-        ]
+    center_arr = F.expr(
+        "array(" + ", ".join(_array_sql(c) for c in centers) + ")"
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_v"),
-            F.element_at(center_arr, F.col("cluster") + 1),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    d2 = _sq_dist_fold(
+        F.col("_v"), F.element_at(center_arr, F.col("cluster") + 1)
     )
     norm = F.sqrt(_dot(F.col("_v"), F.col("_v")))
     return (

@@ -367,9 +367,10 @@ def _lsh_plane_sql() -> str:
     plan as literals (operators/similarity._hyperplanes — one source
     of truth). The planes are Python floats; their shortest repr
     round-trips to the identical IEEE double in DuckDB's parser and in
-    Spark's F.lit, and tests/test_llm_pipeline.py::
-    test_lsh_plane_dot_product_cross_engine_exact proves DuckDB's
-    list_dot_product equals the engine's zip_with/aggregate fold
+    Spark's (as a ``D``-suffixed SQL literal), and tests/
+    test_llm_pipeline.py::test_lsh_plane_dot_product_cross_engine_exact
+    proves DuckDB's list_dot_product equals the engine's unrolled plane
+    dot (similarity._plane_dot, what sign_lsh_buckets evaluates)
     BIT-FOR-BIT on these very plane literals over the oracle-scale
     embeddings (ADVICE r8: the q_sim_topk hash only certifies 6dp,
     too weak for a sign that can flip within one ulp of zero), so the

@@ -1001,18 +1001,18 @@ def test_vendored_png_decodes_all_color_types_and_sizes():
 
 def test_lsh_plane_dot_product_cross_engine_exact(spark, duck, oracle_sf_dir):
     """Direct cross-engine parity for the sign-LSH bucket signs (ADVICE
-    r8): Spark's zip_with/aggregate left fold vs DuckDB's
+    r8): the engine's plane dot (``_plane_dot``, the unrolled
+    expression ``sign_lsh_buckets`` evaluates) vs DuckDB's
     list_dot_product, over the ACTUAL hyperplane literals the engine
     bakes into its plan, on the real oracle-scale embeddings — EXACT
     IEEE-double equality, no rounding. q_sim_topk only proves the two
-    folds agree to 6dp; a bucket sign flips on a one-ulp disagreement
+    engines agree to 6dp; a bucket sign flips on a one-ulp disagreement
     near zero, so the q_sim_lsh_topk oracle needs this stronger fact."""
     import struct as _struct
 
     from mapreduceframework_cpp_spark.operators.similarity import (
-        _as_double,
-        _dot,
         _hyperplanes,
+        _plane_dot,
     )
     from mapreduceframework_cpp_spark.queries.llm_pipeline import EMB_DIM
 
@@ -1020,8 +1020,7 @@ def test_lsh_plane_dot_product_cross_engine_exact(spark, duck, oracle_sf_dir):
 
     emb = spark.read.parquet(f"{oracle_sf_dir}/embeddings.parquet")
     cols = [
-        _dot(_as_double(F.col("embedding")), F.array(*[F.lit(x) for x in plane]))
-        .alias(f"d{j}")
+        F.expr(_plane_dot("embedding", plane)).alias(f"d{j}")
         for j, plane in enumerate(planes)
     ]
     got = {
@@ -1047,6 +1046,145 @@ def test_lsh_plane_dot_product_cross_engine_exact(spark, duck, oracle_sf_dir):
     for vid, dots in got.items():
         for j, (a, b) in enumerate(zip(dots, want[vid])):
             assert bits(a) == bits(b), (vid, j, a, b)
+
+
+def test_fixed_width_expressions_equal_hof_fold_bit_for_bit(spark, oracle_sf_dir):
+    """The unrolled fixed-width expressions the similarity operators
+    build as SQL text — L2 norm, pairwise dot, LSH plane dot, IVF
+    squared distance — equal the generic zip_with/aggregate fold BIT
+    FOR BIT over the oracle-scale embeddings. The fold side reads its
+    planes and centers as DATA (an array<double> column), so it shares
+    no literal path with the SQL text; a hand-made plane of edge
+    literals (``-0.0``, ``1e-06``, negative exponents, a subnormal)
+    guards the ``repr(x)``-plus-``D`` round trip, and the literals
+    themselves are compared directly, since a sign-of-zero slip cannot
+    change a sum seeded with +0.0."""
+    import math
+    import struct as _struct
+
+    from mapreduceframework_cpp_spark.operators.similarity import (
+        _array_sql,
+        _as_double,
+        _dot,
+        _dot_fixed,
+        _hyperplanes,
+        _norm_fixed,
+        _plane_dot,
+        _sq_dist,
+        _sq_dist_fold,
+        _sq_norm_raw,
+    )
+    from mapreduceframework_cpp_spark.queries.llm_pipeline import EMB_DIM
+
+    bits = lambda f: _struct.pack("<d", f)  # noqa: E731 - bit-exact lens
+    # negative zero, small magnitudes printed with a negative exponent,
+    # a subnormal
+    edge = [-0.0, 1e-06, -2.5e-07, 0.0, 3e-12, -1.0, 123456.789, 5e-324]
+    hand = (edge * EMB_DIM)[:EMB_DIM]
+    specials = [math.inf, -math.inf]
+    lits = spark.range(1).select(F.expr(_array_sql(hand + specials))).first()[0]
+    assert [bits(x) for x in lits] == [bits(x) for x in hand + specials]
+    assert math.isnan(
+        spark.range(1).select(F.expr(_array_sql([math.nan]))).first()[0][0]
+    )
+
+    emb = spark.read.parquet(f"{oracle_sf_dir}/embeddings.parquet")
+    v = _as_double(F.col("embedding"))
+    vecs = _hyperplanes(EMB_DIM, 12, seed=7) + [hand]
+
+    fixed = emb.select(
+        "vec_id",
+        F.expr(_sq_norm_raw("embedding", EMB_DIM)).alias("n2"),
+        _norm_fixed("embedding", EMB_DIM).alias("n"),
+        *[F.expr(_plane_dot("embedding", p)).alias(f"pd{j}") for j, p in enumerate(vecs)],
+        *[F.expr(_sq_dist("embedding", p)).alias(f"d2{j}") for j, p in enumerate(vecs)],
+    ).collect()
+    folded = emb.select(
+        "vec_id", _dot(v, v).alias("n2"), F.sqrt(_dot(v, v)).alias("n")
+    ).collect()
+    vec_df = spark.createDataFrame(
+        list(enumerate(vecs)), "j int, p array<double>"
+    )
+    by_vec = {
+        (r.vec_id, r.j): (r.pd, r.d2)
+        for r in emb.crossJoin(vec_df).select(
+            "vec_id",
+            "j",
+            _dot(v, F.col("p")).alias("pd"),
+            _sq_dist_fold(v, F.col("p")).alias("d2"),
+        ).collect()
+    }
+    fold_norm = {r.vec_id: (r.n2, r.n) for r in folded}
+    assert len(fixed) == len(fold_norm) > 0
+    for r in fixed:
+        assert bits(r.n2) == bits(fold_norm[r.vec_id][0]), r.vec_id
+        assert bits(r.n) == bits(fold_norm[r.vec_id][1]), r.vec_id
+        for j in range(len(vecs)):
+            pd, d2 = by_vec[(r.vec_id, j)]
+            assert bits(r[f"pd{j}"]) == bits(pd), (r.vec_id, j)
+            assert bits(r[f"d2{j}"]) == bits(d2), (r.vec_id, j)
+
+    # pairwise dot over attributes, as the top-k / near-dup / kNN joins
+    # evaluate it
+    vv = emb.select("vec_id", v.alias("_v"))
+    pairs = (
+        vv.filter(F.col("vec_id") % 10 == 0)
+        .select(F.col("vec_id").alias("a"), F.col("_v").alias("_qv"))
+        .crossJoin(vv.select(F.col("vec_id").alias("b"), F.col("_v").alias("_cv")))
+        .select(
+            F.expr(_dot_fixed("_qv", "_cv", EMB_DIM)).alias("fixed"),
+            _dot(F.col("_qv"), F.col("_cv")).alias("fold"),
+        )
+        .collect()
+    )
+    assert pairs
+    assert all(bits(r.fixed) == bits(r.fold) for r in pairs)
+
+
+def test_fixed_width_builders_round_trips_do_not_scale_with_dim(spark, monkeypatch):
+    """Building a fixed-width expression costs a constant number of py4j
+    gateway commands, whatever ``dim`` and ``n_planes`` are: the SQL
+    text is parsed JVM-side in one call. Built through the Column API,
+    every term cost ~8 round trips (0.7-1.4 s for one 64-d norm). Counts
+    the commands this thread sends while building (memory-release
+    commands, which the finalizer thread sends, are not counted);
+    nothing is executed and no timing is asserted."""
+    import threading
+
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from mapreduceframework_cpp_spark.operators.similarity import (
+        sign_lsh_buckets,
+        with_norm,
+    )
+
+    client = spark.sparkContext._gateway._gateway_client
+    me = threading.get_ident()
+    emb = spark.createDataFrame(
+        [(1, [0.5] * 64)], "vec_id long, embedding array<float>"
+    )
+
+    def commands(dim, n_planes):
+        sent = []
+        send = client.send_command
+
+        def counting(command, *args, **kwargs):
+            if threading.get_ident() == me and not command.startswith(
+                MEMORY_COMMAND_NAME
+            ):
+                sent.append(command)
+            return send(command, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            with_norm(emb, dim=dim)
+            sign_lsh_buckets(emb, dim, n_planes)
+        return len(sent)
+
+    commands(8, 2)  # warm any one-time lookups
+    small, large = commands(8, 2), commands(64, 12)
+    assert small > 0
+    assert abs(large - small) <= 2, (small, large)
 
 
 def test_fingerprint_oracle_parity_on_null_and_degenerate_text(spark):
